@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from compendium_spark.functions.qc import project_disposition, project_qc, sample_qc
 from compendium_spark.functions.sources_filter import filter_sources
+from compendium_spark.localframe import local_df
 from compendium_spark.pipeline import amplicon, orchestrate
 from compendium_spark.pipeline.enrichment import (
     UPDATE_FIELDS,
@@ -190,18 +191,27 @@ def cmd_runs(wh: Warehouse, args) -> int:
     if not staged_rows:
         print("no updates fetched")
         return 0
-    staged = wh.spark.createDataFrame(
-        staged_rows,
+    # one update per srs: a sample with several EXPERIMENT_PACKAGEs
+    # takes each package's non-null fields in document order — the
+    # reference's per-entry UPDATE loop (db.py:440-467). Merging the
+    # packages as separate rows would join each onto the sample.
+    folded: dict[str, dict] = {}
+    for row in staged_rows:
+        folded.setdefault(row["srs"], {}).update(
+            {k: v for k, v in row.items() if v is not None}
+        )
+    cols = ("srs", *UPDATE_FIELDS)
+    staged = local_df(
+        wh.spark,
+        [tuple(r.get(c) for c in cols) for r in folded.values()],
         "srs string, srr array<string>, project string, library_strategy string, "
         "library_source string, pubdate string, total_bases long, instrument string",
     ).withColumn("pubdate", F.col("pubdate").cast("timestamp"))
     # partition-pruned MERGE: rewrites O(touched taxa), never the full
     # samples table (apply_enrichment stays as the frame-level form the
     # emulation tests pin; this is its warehouse-pruned equivalent)
-    wh.partial_update(
-        "samples", staged.select("srs", *UPDATE_FIELDS), key="srs"
-    )
-    print(f"updated {len(staged_rows)} samples")
+    wh.partial_update("samples", staged, key="srs")
+    print(f"updated {len(folded)} samples")
     return 0
 
 
@@ -213,9 +223,17 @@ def cmd_asvs(wh: Warehouse, args) -> int:
     if not todo_projects:
         print("no projects to evaluate")
         return 0
-    results = amplicon.infer_regions(seqs.filter(F.col("project").isin(todo_projects)))
+    # evaluate the alignment kernel ONCE: its ≤count result rows feed
+    # both the merge and the report
+    rows = amplicon.infer_regions(
+        seqs.filter(F.col("project").isin(todo_projects))
+    ).collect()
+    results = local_df(
+        wh.spark, [tuple(r) for r in rows],
+        "project string, region string, length double",
+    )
     wh.upsert("asv_inference", results, key="project")
-    for r in results.collect():
+    for r in rows:
         print(f"{r.project}: {r.region}, {r.length}")
     return 0
 
@@ -236,9 +254,11 @@ def cmd_load_results(wh: Warehouse, args) -> int:
     fasta = read_fasta(wh.spark, f"{d}/ASVs.fa")
     taxonomy = read_taxonomy(wh.spark, f"{d}/ASVs_taxonomy.tsv")
     seqs, assigns = assemble_asv_tables(fasta, taxonomy, project=args.project)
-    wh.append("asv_counts", counts)
-    wh.append("asv_sequences", seqs)
-    wh.append("asv_assignments", assigns)
+    # keyed on the deterministic surrogate keys, so re-running the
+    # command after a crash lands the same rows once
+    wh.upsert("asv_counts", counts, key="entryid")
+    wh.upsert("asv_sequences", seqs, key=["project", "asv"])
+    wh.upsert("asv_assignments", assigns, key="asv_id")
     # full lifecycle tail (projects.py:525-551): results recorded →
     # complete; archive written → archived; files deleted → done.
     # Without --archive-dir the project stays at 'complete' (the

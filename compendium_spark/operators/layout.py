@@ -36,9 +36,10 @@ def _data_files(path: str | Path) -> list[Path]:
 
 
 def _staged_replace(df: DataFrame, target: Path) -> None:
-    """Write df to a staging dir then atomically swap it in — safe
-    when df reads the target itself (same discipline as
-    Warehouse.write)."""
+    """Write df to a staging dir then swap it in — safe when df reads
+    the target itself, but NOT crash-atomic: a crash between the
+    rmtree and the rename loses the dataset. Warehouse tables get the
+    transactional form, ``Warehouse.compact``."""
     staging = target.parent / f".{target.name}.staging-{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(str(staging))
     if target.exists():

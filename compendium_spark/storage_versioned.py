@@ -71,8 +71,13 @@ writers may TRUNCATE long string min/max — truncation keeps bounds
 valid (lower bound shortened, upper bound incremented), so pruning
 on truncated stats is still sound, just less tight.
 
-At 100 TB the swap-in is mechanical: `VersionedWarehouse` keeps the
-`Warehouse` API, so `spark.sql(merge_into_sql(...))` against a real
+This is the engine's only warehouse: `storage.Warehouse` is this
+class, so the CLI and the project-status state machine
+(pipeline/orchestrate.py) commit through the same manifests — every
+status transition is one snapshot, and ``history("status")`` is the
+audit trail of the reference's single SQLite file (db.py:24), with
+its transactional writes restored. At 100 TB the swap-in is
+mechanical: `spark.sql(merge_into_sql(...))` against a real
 Delta/Iceberg catalog replaces `upsert()` with no caller changes
 (cli.py takes the warehouse as a parameter everywhere).
 """
@@ -86,10 +91,22 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from compendium_spark.localframe import local_df
 from compendium_spark.operators.merge import partial_update, upsert
 from compendium_spark.operators.validate import validate_schema
 from compendium_spark.schemas import ALL_TABLES
-from compendium_spark.storage import PARTITION_SPEC
+
+# First-snapshot partition spec (later snapshots carry their own, see
+# set_partition_spec): a merge rewrites only the touched partitions'
+# files, so a per-project merge costs O(project), not O(warehouse).
+# `samples` partitions on taxon (one taxon per compendium run,
+# main.py:27); `status` is a |projects|-row control table and stays
+# unpartitioned.
+PARTITION_SPEC: dict[str, str] = {
+    "asv_sequences": "project",
+    "asv_inference": "project",
+    "samples": "taxon",
+}
 
 
 class VersionConflictError(RuntimeError):
@@ -794,7 +811,7 @@ class VersionedWarehouse:
             )
             out = df if out is None else out.unionByName(df)
         if out is None:  # a snapshot can legitimately be empty
-            return self.spark.createDataFrame([], schema)
+            return local_df(self.spark, [], schema)
         return out
 
     def scan_files(
@@ -848,7 +865,7 @@ class VersionedWarehouse:
             version = self.version_at(name, as_of)
         v = self.latest(name) if version is None else version
         if v is None:
-            df = self.spark.createDataFrame([], self.table_schema(name))
+            df = local_df(self.spark, [], self.table_schema(name))
         else:
             kept, _ = self.scan_files(name, v, where)
             df = self._read_files(name, kept, self.table_schema(name, v))
@@ -902,8 +919,22 @@ class VersionedWarehouse:
             base=base, carried_stats=man.get("stats"), schema=sch,
         )
 
+    def init_tables(self) -> None:
+        """Idempotent DDL (the reference's CREATE TABLE IF NOT EXISTS,
+        db.py:29, db.py:85-186): every table without a snapshot gets
+        an EMPTY one — no data files, its declared schema and
+        partition spec. Metadata only: no Spark job runs."""
+        for name in self.tables:
+            if self.latest(name) is None:
+                self._commit(
+                    name, None, [], "create", PARTITION_SPEC.get(name),
+                    base=None,
+                )
+
     def write(self, name: str, df: DataFrame, txn=None) -> int:
-        """Full-overwrite commit: all-new files, nothing carried."""
+        """Full-overwrite commit: all-new files, nothing carried. Safe
+        when ``df`` reads the table it replaces: the base snapshot's
+        files stay in place until VACUUM."""
         base = self.latest(name)
         return self._commit(
             name, df, [], "overwrite", self._pcol(name, base),
@@ -1048,53 +1079,54 @@ class VersionedWarehouse:
                 f"partial_update on {name!r} may not modify its "
                 f"partition column {pcol!r}"
             )
-        # touched partition values: the updates' own values plus (for a
-        # full-row upsert that may MOVE keys) the values currently
-        # holding the updated keys
-        upd_parts = (
-            updates.select(pcol)
-            if pcol in updates.columns
-            else self.spark.createDataFrame([], f"{pcol} string")
-        )
-        # key -> current-partition mapping. The naive source is a full
-        # table scan per merge — O(table), the dominant cost of a
-        # small merge into a big table. When the update key set is
-        # BOUNDED (collected up to a cap — typical MERGE batches are
-        # thousands of keys, and the cap bounds driver memory) and
-        # single-column, the scan goes through read(where=[(key, 'in',
-        # vals)]) instead: manifest min/max + dict/bloom membership
-        # hints skip every file that provably holds none of the keys,
-        # so the mapping costs O(files actually holding update keys)
-        # (r14; measured flat in tools/decade_probe.py --cdf-only).
-        # Hints are conservative — a kept file is re-filtered by the
-        # residual predicate and the semi-join below, so the pruned
-        # path returns exactly the naive path's rows.
-        mapped_src = current
-        if len(keys) == 1:
-            kvals = [
-                r[0]
-                for r in updates.select(keys[0])
-                .distinct()
-                .limit(_MERGE_KEY_PRUNE_CAP + 1)
-                .collect()
-            ]
-            if 0 < len(kvals) <= _MERGE_KEY_PRUNE_CAP and all(
-                v is not None for v in kvals
-            ):
-                mapped_src = self.read(
-                    name, base, where=[(keys[0], "in", kvals)]
+        if pcol in keys:
+            # a matched row already sits in its update's partition (the
+            # partition value is part of its key), so the touched set is
+            # the updates' own values — no key->partition mapping
+            parts = updates.select(pcol)
+        else:
+            # the updates' own values (a full-row upsert may MOVE keys)
+            # plus the values currently holding the updated keys. That
+            # key -> partition mapping would be a full table scan; with
+            # a bounded single-column key set it goes through
+            # read(where=[(key, 'in', vals)]) instead, whose stats and
+            # dict/bloom hints skip files holding none of the keys (r14,
+            # measured flat in tools/decade_probe.py --cdf-only). The
+            # residual filter and the semi-join keep the rows exact.
+            upd_parts = (
+                updates.select(pcol)
+                if pcol in updates.columns
+                else local_df(self.spark, [], f"{pcol} string")
+            )
+            mapped_src = current
+            if len(keys) == 1:
+                kvals = [
+                    r[0]
+                    for r in updates.select(keys[0])
+                    .distinct()
+                    .limit(_MERGE_KEY_PRUNE_CAP + 1)
+                    .collect()
+                ]
+                if 0 < len(kvals) <= _MERGE_KEY_PRUNE_CAP and all(
+                    v is not None for v in kvals
+                ):
+                    mapped_src = self.read(
+                        name, base, where=[(keys[0], "in", kvals)]
+                    )
+            mapped = (
+                mapped_src.select(*keys, pcol)
+                .join(
+                    F.broadcast(updates.select(*keys)), on=keys,
+                    how="left_semi",
                 )
-        mapped = (
-            mapped_src.select(*keys, pcol)
-            .join(F.broadcast(updates.select(*keys)), on=keys, how="left_semi")
-            .select(pcol)
-        )
+                .select(pcol)
+            )
+            parts = upd_parts.unionByName(mapped)
         # collect each touched value in BOTH representations: typed (for
         # the isin() file filter below) and Spark-string-rendered (for
         # _rebase_target, whose rival side is path-derived strings)
         touched_rows = (
-            upd_parts.unionByName(mapped)
-            .distinct()
+            parts.distinct()
             .select(
                 F.col(pcol).alias("v"),
                 F.col(pcol).cast("string").alias("s"),

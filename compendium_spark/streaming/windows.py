@@ -449,9 +449,9 @@ def streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     were split across microbatches — the invariant the oracle checks.
 
     The driver-side dict stands in for the warehouse MV table exactly
-    as in streaming_status_merge (production: storage.Warehouse
-    MERGE on Parquet/Delta); rows are O(windows x event types) per
-    batch, never O(events).
+    as in streaming_status_merge (production: mv_refresh_versioned_sink,
+    an exactly-once warehouse MERGE); rows are O(windows x event types)
+    per batch, never O(events).
     """
     ev = read_events_stream(spark, sf_dir)
     state, _progress = run_mv_refresh(mv_refresh_updates(ev))
@@ -509,8 +509,8 @@ def run_mv_refresh(updates: DataFrame) -> tuple[dict, list]:
     return state, progress
 
 
-# the maintained MV's stored schema — registered as a Warehouse
-# extra table by run_mv_refresh_warehouse below
+# the maintained MV's stored schema — registered as a warehouse
+# extra table by run_mv_refresh_versioned below
 MV_HOURLY_SCHEMA = T.StructType(
     [
         T.StructField("hour", T.TimestampType()),
@@ -519,26 +519,6 @@ MV_HOURLY_SCHEMA = T.StructType(
         T.StructField("total_value", T.DoubleType()),
     ]
 )
-
-
-def mv_refresh_warehouse_sink(wh, table: str = "mv_hourly"):
-    """The PRODUCTION foreachBatch body run_mv_refresh's driver dict
-    stands in for (VERDICT r10 #3): each microbatch aggregates to
-    mergeable (count, sum) partials and folds them into a stored
-    Warehouse table by per-key ADDITION — read the current rows for
-    the touched keys, add, `Warehouse.upsert` exactly those rows.
-    Per batch the write is O(touched (hour, event_type) keys), never
-    O(events) and never O(MV): at 100 TB the same body lands on a
-    Delta/Iceberg MERGE via operators/merge.merge_into_sql."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        wh.upsert(
-            table,
-            _mv_fold(batch_df, wh.read(table)),
-            key=["hour", "event_type"],
-        )
-
-    return apply_batch
 
 
 def _mv_fold(batch_df: DataFrame, cur_mv: DataFrame) -> DataFrame:
@@ -571,9 +551,15 @@ def _mv_fold(batch_df: DataFrame, cur_mv: DataFrame) -> DataFrame:
 
 
 def mv_refresh_versioned_sink(vwh, table: str = "mv_hourly", app_id: str = "mv_fold"):
-    """EXACTLY-ONCE foreachBatch body (the replay-safety
-    mv_refresh_warehouse_sink deliberately does not claim): Structured
-    Streaming's foreachBatch is at-least-once across crash recovery —
+    """The PRODUCTION foreachBatch body run_mv_refresh's driver dict
+    stands in for: each microbatch aggregates to mergeable (count, sum)
+    partials and folds them into a stored warehouse table by per-key
+    ADDITION (``_mv_fold``), upserting exactly the touched keys — per
+    batch the write is O(touched (hour, event_type) keys), never
+    O(events) and never O(MV).
+
+    EXACTLY-ONCE: Structured Streaming's foreachBatch is
+    at-least-once across crash recovery —
     a micro-batch whose sink ran but whose checkpoint offset commit
     didn't lands AGAIN with the same batch_id, and an additive fold
     would double-count it. This body closes that with the
@@ -638,26 +624,6 @@ def run_mv_refresh_versioned(
     )
     q.awaitTermination()
     return vwh.read(table)
-
-
-def run_mv_refresh_warehouse(
-    updates: DataFrame, wh, table: str = "mv_hourly"
-) -> DataFrame:
-    """Drain ``updates`` through the warehouse-backed add-merge fold
-    and return the stored MV table. Equality with run_mv_refresh's
-    driver-dict state is pinned in tests/test_streaming_mv_sink.py."""
-
-    q = (
-        updates.writeStream.foreachBatch(mv_refresh_warehouse_sink(wh, table))
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="cs_mv_refresh_wh_ckpt_"),
-        )
-        .start()
-    )
-    q.awaitTermination()
-    return wh.read(table)
 
 
 SCD2_OUT_SCHEMA = (

@@ -87,9 +87,7 @@ ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
     # --- fixed-size sketch/filter structures --------------------------
     ("plans/bloom.py", "dedup_bloom_prefilter"): (2, "Bloom bit array (m=256 fixed) + ref hashes of a FILTERED slice (documented)"),
     ("operators/merge.py", "partial_update"): (1, "update batch (delta, bounded by ingest contract)"),
-    ("storage.py", "_partial_update_partitions"): (1, "update KEY projection (delta-sized) semi-joined into a key+pcol column-pruned scan"),
-    ("storage.py", "_merge_partitions"): (1, "same delta-sized update-key projection, for the upsert move guard (ADVICE r10 #1)"),
-    ("storage_versioned.py", "_merge"): (1, "same delta-sized update-key projection (the versioned COW merge's touched-partition mapping)"),
+    ("storage_versioned.py", "_merge"): (1, "update KEY projection (delta-sized) semi-joined into a key+pcol column-pruned scan: the COW merge's touched-partition mapping and upsert move guard"),
     # --- round-9 plans (folded in from the r8 on-deck module) ---------
     ("plans/scoring.py", "_dsir_doc_scores"): (2, "1-row totals + ≤256-bucket hashed model (bounded by construction); shared by both DSIR plans"),
     ("plans/ivf.py", "sim_ivf_tuning_curve"): (4, "≤10-query side, 4-row sweep, 1-row totals"),

@@ -106,6 +106,40 @@ def test_full_command_flow(spark, wh_dir, tmp_path, capsys):
     assert "projects: 1" in out and "samples: 2" in out and "ASVs: 2" in out
 
 
+EFETCH_TWO_PACKAGES = """<R><EXPERIMENT_PACKAGE><SAMPLE accession="SRS001"/>
+<RUN accession="SRR100" total_bases="10"/><EXTERNAL_ID namespace="BioProject">PRJ1</EXTERNAL_ID>
+<INSTRUMENT_MODEL>MiSeq</INSTRUMENT_MODEL>
+</EXPERIMENT_PACKAGE>
+<EXPERIMENT_PACKAGE><SAMPLE accession="SRS002"/>
+<RUN accession="SRR200"/><EXTERNAL_ID namespace="BioProject">PRJ1</EXTERNAL_ID>
+</EXPERIMENT_PACKAGE>
+<EXPERIMENT_PACKAGE><SAMPLE accession="SRS001"/>
+<RUN accession="SRR101" total_bases="20"/><EXTERNAL_ID namespace="BioProject">PRJ2</EXTERNAL_ID>
+</EXPERIMENT_PACKAGE></R>"""
+
+
+def test_runs_folds_packages_per_sample(spark, tmp_path, capsys):
+    """A sample with two EXPERIMENT_PACKAGEs gets ONE samples row: the
+    packages apply in document order and only non-null fields
+    overwrite, like the reference's per-entry UPDATE (db.py:440-467)."""
+    wh_dir = str(tmp_path / "wh")
+    xml, mock = tmp_path / "bs.xml", tmp_path / "efetch.xml"
+    xml.write_text(XML)
+    mock.write_text(EFETCH_TWO_PACKAGES)
+    assert run(spark, wh_dir, "init") == 0
+    assert run(spark, wh_dir, "xml", "txid408170", str(xml)) == 0
+    capsys.readouterr()
+    assert run(spark, wh_dir, "runs", "--mock-xml", str(mock)) == 0
+    assert "updated 2 samples" in capsys.readouterr().out
+    rows = Warehouse(spark, wh_dir).read("samples").collect()
+    assert len(rows) == 2
+    by_srs = {r.srs: r for r in rows}
+    s1 = by_srs["SRS001"]
+    assert (s1.srr, s1.project, s1.total_bases) == (["SRR101"], "PRJ2", 20)
+    assert s1.instrument == "MiSeq"  # the second package had none
+    assert by_srs["SRS002"].srr == ["SRR200"]
+
+
 def test_load_countries_and_geo_report(spark, wh_dir, tmp_path, capsys):
     """Geo dimension ingest (ref db.py:104-117 defines the tables but
     no loader) + the native samples→geo_loc_countries→countries
@@ -213,10 +247,9 @@ def test_warehouse_merge_roundtrip(spark, tmp_path):
 
 def test_partitioned_upsert_touches_only_affected_partitions(spark, tmp_path):
     """asv_sequences is hive-partitioned by project; an upsert for one
-    project must leave every other partition's files untouched on disk
-    (partition-level MERGE, not a table rewrite)."""
-    import os
-
+    project must carry every other partition's files into the new
+    snapshot by reference (partition-level MERGE, not a table
+    rewrite)."""
     wh = Warehouse(spark, str(tmp_path / "wh3"))
     wh.init_tables()
     schema = "asv_id long, project string, asv string, seq string"
@@ -226,8 +259,11 @@ def test_partitioned_upsert_touches_only_affected_partitions(spark, tmp_path):
             [(1, "P1", "ASV_1", "AAA"), (2, "P2", "ASV_1", "CCC")], schema
         ),
     )
-    p2_dir = wh.path("asv_sequences") / "project=P2"
-    before = {f: os.path.getmtime(p2_dir / f) for f in os.listdir(p2_dir)}
+    v = wh.latest("asv_sequences")
+    p2_files = {
+        f for f in wh.manifest("asv_sequences", v)["files"] if "/project=P2/" in f
+    }
+    assert p2_files
 
     wh.upsert(
         "asv_sequences",
@@ -236,8 +272,10 @@ def test_partitioned_upsert_touches_only_affected_partitions(spark, tmp_path):
         ),
         key=["project", "asv"],
     )
-    after = {f: os.path.getmtime(p2_dir / f) for f in os.listdir(p2_dir)}
-    assert before == after  # P2 partition untouched byte-for-byte
+    added, removed = wh.diff("asv_sequences", v, v + 1)
+    assert added and all("/project=P1/" in f for f in added + removed)
+    # P2 partition untouched: the very same files, carried by reference
+    assert p2_files <= set(wh.manifest("asv_sequences", v + 1)["files"])
 
     got = {
         (r.project, r.asv): r.seq

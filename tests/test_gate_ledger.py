@@ -81,6 +81,9 @@ def test_overflow_entries_are_stale_reasoned_and_minimal():
     assert len(stale) - len(ovf) <= gl.WINDOW, (
         "overflow still leaves more stale plans than slots"
     )
+    assert len(ovf) <= len(stale) - gl.WINDOW, (
+        "overflow defers more stale plans than the window cannot hold"
+    )
 
 
 def test_rows_only_plans_are_not_flagged():

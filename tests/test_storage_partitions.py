@@ -3,6 +3,11 @@ evidence that `Warehouse.partial_update` on a partitioned table
 rewrites ONLY the partitions holding updated keys — the property that
 makes a per-project sweep O(project), not O(warehouse), at 100 TB.
 
+The evidence is the snapshot manifests: a merge's new snapshot lists
+the untouched partitions' data files BY REFERENCE (the same paths as
+the base snapshot), so ``diff(name, v, v + 1)`` names only files of
+the touched partitions.
+
 Pinned on `samples` (partitioned by taxon — the fact table whose
 enrichment sweeps are the scale concern) rather than `status`, which
 stays deliberately unpartitioned: it is a |projects|-row control
@@ -16,7 +21,8 @@ import datetime
 import pytest
 
 from compendium_spark.schemas import SAMPLES
-from compendium_spark.storage import PARTITION_SPEC, Warehouse
+from compendium_spark.storage import Warehouse
+from compendium_spark.storage_versioned import PARTITION_SPEC
 
 
 def _mk_samples(spark, rows):
@@ -40,13 +46,25 @@ def _mk_samples(spark, rows):
     )
 
 
-def _snapshot(root):
-    """relative file path -> (size, mtime_ns) for every data file."""
-    return {
-        str(p.relative_to(root)): (p.stat().st_size, p.stat().st_mtime_ns)
-        for p in root.rglob("*")
-        if p.is_file() and not p.name.startswith("_")
-    }
+def _partition(rel: str) -> str:
+    """The hive partition segment (``taxon=...``) of a manifest path."""
+    return next(seg for seg in rel.split("/") if seg.startswith("taxon="))
+
+
+def _merge_diff(wh, merge) -> tuple[set[str], set[str]]:
+    """Run ``merge()`` and return the partitions of the files the new
+    snapshot added and removed (empty sets if nothing committed)."""
+    v = wh.latest("samples")
+    merge()
+    if wh.latest("samples") == v:
+        return set(), set()
+    added, removed = wh.diff("samples", v, v + 1)
+    return {_partition(f) for f in added}, {_partition(f) for f in removed}
+
+
+def _live_partitions(wh) -> set[str]:
+    v = wh.latest("samples")
+    return {_partition(f) for f in wh.manifest("samples", v)["files"]}
 
 
 @pytest.fixture()
@@ -70,32 +88,21 @@ def wh(spark, tmp_path):
 
 def test_samples_is_partitioned(wh):
     assert PARTITION_SPEC["samples"] == "taxon"
-    parts = {p.name for p in wh.path("samples").iterdir() if p.is_dir()}
-    assert parts == {"taxon=txidA", "taxon=txidB", "taxon=txidC"}
+    assert _live_partitions(wh) == {"taxon=txidA", "taxon=txidB", "taxon=txidC"}
 
 
 def test_partial_update_rewrites_only_touched_partitions(wh, spark):
     """The IO contract: updating keys that live in ONE partition
-    leaves every other partition's data files byte-identical
-    (same names, sizes, mtimes) — they were never read wide, never
-    rewritten."""
-    before = _snapshot(wh.path("samples"))
+    carries every other partition's data files into the new snapshot
+    by reference — they were never read wide, never rewritten."""
     updates = spark.createDataFrame(
         [("SRS3", "AMPLICON")], "srs string, library_strategy string"
     )
-    wh.partial_update("samples", updates, key="srs")
-    after = _snapshot(wh.path("samples"))
-
-    untouched_before = {k: v for k, v in before.items() if "taxon=txidB" not in k}
-    untouched_after = {k: v for k, v in after.items() if "taxon=txidB" not in k}
-    assert untouched_before == untouched_after, (
-        "files outside the touched partition were rewritten"
+    added, removed = _merge_diff(
+        wh, lambda: wh.partial_update("samples", updates, key="srs")
     )
-    touched_after = {k for k in after if "taxon=txidB" in k}
-    touched_before = {k: v for k, v in before.items() if "taxon=txidB" in k}
-    assert {
-        k for k in touched_after if touched_before.get(k) == after[k]
-    } != touched_after, "the touched partition was not rewritten"
+    assert added == {"taxon=txidB"}, "files outside the touched partition were written"
+    assert removed == {"taxon=txidB"}, "the touched partition was not rewritten"
 
     # and the merge itself is correct: non-null field overwrote, the
     # sibling row in the same partition survived untouched
@@ -108,13 +115,13 @@ def test_partial_update_rewrites_only_touched_partitions(wh, spark):
 
 def test_partial_update_unknown_key_is_noop(wh, spark):
     """The reference's silently-no-op UPDATE (SURVEY §7.4): an update
-    for an unknown key touches NOTHING — no partition is rewritten."""
-    before = _snapshot(wh.path("samples"))
+    for an unknown key touches NOTHING — no new snapshot is committed."""
+    v = wh.latest("samples")
     updates = spark.createDataFrame(
         [("SRS999", "AMPLICON")], "srs string, library_strategy string"
     )
     wh.partial_update("samples", updates, key="srs")
-    assert _snapshot(wh.path("samples")) == before
+    assert wh.latest("samples") == v
 
 
 def test_partial_update_rejects_partition_column_change(wh, spark):
@@ -129,15 +136,14 @@ def test_partial_update_rejects_partition_column_change(wh, spark):
 
 def test_partial_update_multi_partition_touch(wh, spark):
     """Updates spanning two taxa rewrite exactly those two partitions."""
-    before = _snapshot(wh.path("samples"))
     ts = datetime.datetime(2021, 3, 4, tzinfo=datetime.timezone.utc)
     updates = spark.createDataFrame(
         [("SRS1", ts), ("SRS5", ts)], "srs string, pubdate timestamp"
     )
-    wh.partial_update("samples", updates, key="srs")
-    after = _snapshot(wh.path("samples"))
-    same = {k: v for k, v in before.items() if "taxon=txidB" in k}
-    assert {k: v for k, v in after.items() if "taxon=txidB" in k} == same
+    added, removed = _merge_diff(
+        wh, lambda: wh.partial_update("samples", updates, key="srs")
+    )
+    assert added == removed == {"taxon=txidA", "taxon=txidC"}
     got = {r.srs: r.pubdate for r in wh.read("samples").collect()}
     assert got["SRS1"] is not None and got["SRS5"] is not None
     assert got["SRS2"] is None
@@ -158,13 +164,14 @@ def test_upsert_partition_move_no_duplicate(wh, spark):
 
 
 def test_upsert_move_empties_source_partition(wh, spark):
-    """Moving the ONLY row out of a partition deletes that partition's
-    directory — Spark writes no staging dir for an empty partition, so
-    the swap must clean up explicitly or stale rows survive."""
+    """Moving the ONLY row out of a partition leaves no file of that
+    partition in the new snapshot — stale rows cannot survive there."""
     updates = _mk_samples(spark, [("SRS5", "PRJ3", "txidA")])
-    wh.upsert("samples", updates, key="srs")
-    parts = {p.name for p in wh.path("samples").iterdir() if p.is_dir()}
-    assert "taxon=txidC" not in parts, "emptied partition left on disk"
+    added, removed = _merge_diff(
+        wh, lambda: wh.upsert("samples", updates, key="srs")
+    )
+    assert "taxon=txidC" in removed and "taxon=txidC" not in added
+    assert "taxon=txidC" not in _live_partitions(wh), "emptied partition left in the snapshot"
     rows = {r.srs: r.taxon for r in wh.read("samples").collect()}
     assert rows == {
         "SRS1": "txidA",
@@ -179,13 +186,11 @@ def test_upsert_partition_stable_prunes_io(wh, spark):
     """A partition-stable upsert (key stays in its taxon) still only
     rewrites the touched partition — the move guard's key→partition
     mapping scan must not widen the write set."""
-    before = _snapshot(wh.path("samples"))
     updates = _mk_samples(spark, [("SRS3", "PRJ2-renamed", "txidB")])
-    wh.upsert("samples", updates, key="srs")
-    after = _snapshot(wh.path("samples"))
-    same_before = {k: v for k, v in before.items() if "taxon=txidB" not in k}
-    same_after = {k: v for k, v in after.items() if "taxon=txidB" not in k}
-    assert same_before == same_after, "untouched partitions rewritten"
+    added, removed = _merge_diff(
+        wh, lambda: wh.upsert("samples", updates, key="srs")
+    )
+    assert added == removed == {"taxon=txidB"}, "untouched partitions rewritten"
     rows = {r.srs: r.project for r in wh.read("samples").collect()}
     assert rows["SRS3"] == "PRJ2-renamed"
     assert len(rows) == 5
@@ -194,10 +199,9 @@ def test_upsert_partition_stable_prunes_io(wh, spark):
 def test_upsert_new_key_new_partition(wh, spark):
     """Inserting a brand-new key under a brand-new taxon creates its
     partition without touching the rest."""
-    before = _snapshot(wh.path("samples"))
     updates = _mk_samples(spark, [("SRS9", "PRJ9", "txidQ")])
-    wh.upsert("samples", updates, key="srs")
-    after = _snapshot(wh.path("samples"))
-    old = {k: v for k, v in after.items() if "taxon=txidQ" not in k}
-    assert old == before
+    added, removed = _merge_diff(
+        wh, lambda: wh.upsert("samples", updates, key="srs")
+    )
+    assert added == {"taxon=txidQ"} and removed == set()
     assert len(wh.read("samples").collect()) == 6

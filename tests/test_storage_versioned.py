@@ -95,7 +95,7 @@ def test_cow_carries_untouched_partition_files_by_reference(vwh, spark):
 
 
 def test_upsert_partition_move_across_snapshots(vwh, spark):
-    """The storage.py move-guard semantics hold here too: moving SRS4
+    """The upsert move guard holds across snapshots: moving SRS4
     (txidC's only row) to txidA yields one SRS4 at latest, and txidC's
     file is absent from the new manifest; the OLD snapshot still time-
     travels to the pre-move state."""

@@ -1,97 +1,27 @@
 """VERDICT r10 #5: streaming_mv_refresh's documented production body —
-the foreachBatch fold landing in a REAL `storage.Warehouse` table via
-`upsert` — exercised end-to-end and pinned equal to the registered
+the exactly-once foreachBatch fold landing in a REAL warehouse table
+via `upsert` — exercised end-to-end and pinned equal to the registered
 plan's driver-dict result."""
 
 from __future__ import annotations
 
-import pandas as pd
+from datetime import datetime
 
-from compendium_spark.storage import PARTITION_SPEC, Warehouse
+import pandas as pd
+import pytest
+
+from compendium_spark.storage import Warehouse
+from compendium_spark.storage_versioned import PARTITION_SPEC, VersionedWarehouse
 from compendium_spark.streaming.windows import (
     MV_HOURLY_SCHEMA,
     mv_refresh_updates,
+    mv_refresh_versioned_sink,
     read_events_stream,
-    run_mv_refresh_warehouse,
+    run_mv_refresh_versioned,
     streaming_mv_refresh,
 )
 
 from .conftest import SF_ORACLE
-
-
-def _mv_wh(spark, tmp_path):
-    return Warehouse(
-        spark, str(tmp_path / "wh"), extra_tables={"mv_hourly": MV_HOURLY_SCHEMA}
-    )
-
-
-def test_warehouse_mv_equals_driver_dict(spark, tmp_path):
-    """The stored MV after draining the stream equals the registered
-    plan's driver-dict state (same add-merge invariant), modulo the
-    plan's 4-dp emit quantization."""
-    wh = _mv_wh(spark, tmp_path)
-    stored = run_mv_refresh_warehouse(
-        mv_refresh_updates(read_events_stream(spark, SF_ORACLE)), wh
-    )
-    got = (
-        stored.toPandas()
-        .assign(total_value=lambda d: d.total_value.round(4))
-        .sort_values(["hour", "event_type"], ignore_index=True)
-    )
-    want = (
-        streaming_mv_refresh(spark, SF_ORACLE)
-        .toPandas()
-        .assign(total_value=lambda d: d.total_value.round(4))
-        .sort_values(["hour", "event_type"], ignore_index=True)
-    )
-    pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
-    assert len(got) > 0
-
-
-def test_warehouse_mv_fold_is_additive(spark, tmp_path):
-    """Draining the SAME stream twice through the warehouse sink
-    doubles every count and sum — the fold is add-merge on stored
-    state (a replayed availableNow drain is a new batch of data, not
-    an idempotent overwrite; exactly-once across restarts is the
-    checkpoint's job, pinned by the streaming progress tests)."""
-    wh = _mv_wh(spark, tmp_path)
-    once = run_mv_refresh_warehouse(
-        mv_refresh_updates(read_events_stream(spark, SF_ORACLE)), wh
-    ).toPandas()
-    twice = run_mv_refresh_warehouse(
-        mv_refresh_updates(read_events_stream(spark, SF_ORACLE)), wh
-    ).toPandas()
-    m = once.merge(twice, on=["hour", "event_type"], suffixes=("_1", "_2"))
-    assert len(m) == len(once) == len(twice)
-    assert (m.n_events_2 == 2 * m.n_events_1).all()
-    assert (m.total_value_2 - 2 * m.total_value_1).abs().max() < 1e-6
-
-
-def test_extra_table_is_isolated(spark, tmp_path):
-    """extra_tables extends one Warehouse instance only: the reference
-    nine stay intact, other instances still reject the MV name, and
-    the MV stays unpartitioned unless added to PARTITION_SPEC."""
-    import pytest
-
-    wh = _mv_wh(spark, tmp_path)
-    assert set(wh.tables) >= {"samples", "status", "mv_hourly"}
-    assert "mv_hourly" not in PARTITION_SPEC
-    plain = Warehouse(spark, str(tmp_path / "wh2"))
-    with pytest.raises(KeyError):
-        plain.path("mv_hourly")
-
-
-# ---------------------------------------------------------------------------
-# round 11: exactly-once fold via VersionedWarehouse writer txns
-# ---------------------------------------------------------------------------
-
-from datetime import datetime  # noqa: E402
-
-from compendium_spark.storage_versioned import VersionedWarehouse  # noqa: E402
-from compendium_spark.streaming.windows import (  # noqa: E402
-    mv_refresh_versioned_sink,
-    run_mv_refresh_versioned,
-)
 
 BATCH_SCHEMA = "hour timestamp, event_type string, value double"
 H0 = datetime(2024, 1, 1, 10)
@@ -136,6 +66,72 @@ def test_versioned_mv_equals_driver_dict(spark, tmp_path):
     )
     pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
     assert len(got) > 0
+
+
+def test_warehouse_mv_equals_driver_dict(spark, tmp_path):
+    """The documented production body through the CLI's `storage.Warehouse`
+    name: the drained MV, read back from a freshly opened warehouse on
+    the same root, equals the registered plan's driver-dict state
+    (same add-merge invariant), modulo the plan's 4-dp emit
+    quantization."""
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root, extra_tables={"mv_hourly": MV_HOURLY_SCHEMA})
+    run_mv_refresh_versioned(
+        mv_refresh_updates(read_events_stream(spark, SF_ORACLE)), wh
+    )
+    reopened = Warehouse(spark, root, extra_tables={"mv_hourly": MV_HOURLY_SCHEMA})
+    got = (
+        reopened.read("mv_hourly")
+        .toPandas()
+        .assign(total_value=lambda d: d.total_value.round(4))
+        .sort_values(["hour", "event_type"], ignore_index=True)
+    )
+    want = (
+        streaming_mv_refresh(spark, SF_ORACLE)
+        .toPandas()
+        .assign(total_value=lambda d: d.total_value.round(4))
+        .sort_values(["hour", "event_type"], ignore_index=True)
+    )
+    pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
+    assert len(got) > 0
+
+
+def test_versioned_mv_fold_is_additive(spark, tmp_path):
+    """Draining the SAME stream twice, under two writer app ids,
+    doubles every count and sum — the fold is add-merge on stored
+    state (a second producer's data is new data, not an idempotent
+    overwrite); only a replay under the SAME app id is skipped."""
+    vwh = _vwh(spark, tmp_path)
+    once = run_mv_refresh_versioned(
+        mv_refresh_updates(read_events_stream(spark, SF_ORACLE)), vwh
+    ).toPandas()
+    twice = run_mv_refresh_versioned(
+        mv_refresh_updates(read_events_stream(spark, SF_ORACLE)), vwh,
+        app_id="mv_fold_second",
+    ).toPandas()
+    m = once.merge(twice, on=["hour", "event_type"], suffixes=("_1", "_2"))
+    assert len(m) == len(once) == len(twice)
+    assert (m.n_events_2 == 2 * m.n_events_1).all()
+    assert (m.total_value_2 - 2 * m.total_value_1).abs().max() < 1e-6
+
+
+def test_extra_table_is_isolated(spark, tmp_path):
+    """extra_tables extends one Warehouse instance only: the reference
+    nine stay intact, other instances still reject the MV name, and
+    the MV stays unpartitioned unless added to PARTITION_SPEC."""
+    wh = _vwh(spark, tmp_path)
+    assert set(wh.tables) >= {"samples", "status", "mv_hourly"}
+    assert "mv_hourly" not in PARTITION_SPEC
+    wh.init_tables()
+    assert wh.manifest("mv_hourly", 0)["pcol"] is None
+    plain = VersionedWarehouse(spark, str(tmp_path / "wh2"))
+    with pytest.raises(KeyError):
+        plain.read("mv_hourly")
+
+
+# ---------------------------------------------------------------------------
+# round 11: exactly-once fold via writer txns
+# ---------------------------------------------------------------------------
 
 
 def test_replayed_batch_is_skipped(spark, tmp_path):
